@@ -493,6 +493,15 @@ case class CoarseArgmax(vec: Expression, nrm: Expression,
   * reference (same measured pathology as [[CoarseArgmax]]'s docstring).
   * Arithmetic, fold order, first-max tiebreak, and the 0-clamp replicate
   * the replaced expressions exactly.
+  *
+  * Why no NaN sim reaches this loop or [[CoarseArgmax]]'s: the strict `>`
+  * never selects a NaN (it would silently keep cell 0), where the replaced
+  * `array_max` ordered NaN greatest. But a NaN sim needs a null element
+  * or a zero norm on one side, and the callers rule out each: input
+  * vectors pass `vec_clean` (no null elements, containsNull=false), the
+  * callers' `nonZero` filter drops zero-norm vectors, and `collectCoarse`
+  * keeps only non-zero-norm cells. A vector holding a NaN component is outside
+  * the family's input contract and is not screened here.
   */
 case class CoarseResidSq(vec: Expression, nrm: Expression,
     centroids: Seq[Double], norms: Seq[Double])

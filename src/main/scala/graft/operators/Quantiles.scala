@@ -55,6 +55,11 @@ object Quantiles {
     * A null `pct` means the sketch's rank guarantee was violated —
     * impossible for Spark's GK implementation at the declared accuracy,
     * and loudly caught by the oracle/spec rather than silently absorbed.
+    *
+    * Duplicate query points in `ps` throw [[IllegalArgumentException]]. This
+    * is a contract change: earlier versions returned rows for them, but
+    * those rows double-counted their running sums, so their quantiles
+    * were silently wrong. Dedupe `ps` and reuse the row instead.
     */
   def exactPercentilesOn(df: DataFrame, groupCol: String, valueCol: String,
       ps: Seq[Double], accuracy: Int = 10000,

@@ -11,8 +11,9 @@ import org.apache.hadoop.fs.Path
   * Protocol (single atomic publish, lazy cleanup):
   *  1. read the live manifests and group their data files by partition
   *     directory;
-  *  2. concatenate each group into one consolidated `.jsonl` file (JSON
-  *     lines concatenate byte-for-byte — no parse/re-encode);
+  *  2. concatenate each group through its [[Landing]] into consolidated
+  *     files (JSON lines byte-for-byte, parquet row groups, ORC stripes —
+  *     no parse/re-encode);
   *  3. commit ONE compaction manifest (negative pseudo-epoch) listing the
   *     consolidated files, carrying `#supersedes:` for every consumed
   *     manifest and `#watermark:` preserving the streaming high-water mark —
@@ -196,8 +197,7 @@ object Compact {
       if (oldFiles.isEmpty && live.size <= 1) Result(0, 0, 0)
       else {
         val present = oldFiles.filter(f => fs.exists(new Path(f)))
-        require(present.forall(f =>
-            f.endsWith(".parquet") || f.endsWith(".orc")),
+        require(present.forall(f => Landing.ofFile(f).sparkFormat.isDefined),
           s"clustered compaction requires a columnar table; $tableDir " +
             "holds JSONL epochs (run byte-level Compact.run on those, or " +
             "land with option(\"format\",\"parquet\") or \"orc\")")
@@ -222,7 +222,7 @@ object Compact {
           // with fresh segments (the merger groups by compression)
           "spark.sql.orc.compression.codec" -> "snappy")
           .foreach { case (k, v) => rw.conf.set(k, v) }
-        def rewriteDir(dir: Path, files: Seq[String], ext: String,
+        def rewriteDir(dir: Path, files: Seq[String], landing: Landing,
             stem: String, tmpOut: Path): Seq[String] = {
           val totalBytes = files.map(f =>
             fs.getFileStatus(new Path(f)).getLen).sum
@@ -230,11 +230,9 @@ object Compact {
             (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
           // both columnar readers honor mergeSchema (name-set validation
           // already permits field-order drift across segment lineages)
-          val df =
-            if (ext == "orc") rw.read.option("mergeSchema", "true")
-              .orc(files: _*)
-            else rw.read.option("mergeSchema", "true")
-              .parquet(files: _*)
+          val format = landing.sparkFormat.get
+          val df = rw.read.option("mergeSchema", "true").format(format)
+            .load(files: _*)
           val missing = clusterBy.filterNot(c =>
             df.columns.exists(_.equalsIgnoreCase(c)))
           require(missing.isEmpty,
@@ -250,30 +248,20 @@ object Compact {
             if (zorder) Seq(ZOrder.zColumn(df, clusterBy))
             else clusterBy.map(org.apache.spark.sql.functions.col)
           tmpDirs.synchronized { tmpDirs += tmpOut }
-          val sorted = df.repartitionByRange(nOut, sortKeys: _*)
+          df.repartitionByRange(nOut, sortKeys: _*)
             .sortWithinPartitions(sortKeys: _*)
-            .write.mode("overwrite")
-          if (ext == "orc") sorted.orc(tmpOut.toString)
-          else sorted.parquet(tmpOut.toString)
+            .write.mode("overwrite").format(format).save(tmpOut.toString)
           val parts = fs.listStatus(tmpOut).map(_.getPath)
             .filter(p => p.getName.startsWith("part-") &&
-              p.getName.endsWith(s".$ext"))
+              Landing.ofFile(p.getName) == landing)
             .sortBy(_.getName)
           parts.zipWithIndex.map { case (p, k) =>
-            val target = new Path(dir, s"$stem-$k.$ext")
+            val target = new Path(dir, s"$stem-$k.${landing.ext}")
             written.synchronized { written += target }
             if (!fs.rename(p, target)) throw new java.io.IOException(
               s"failed to place clustered file $target")
-            try {
-              val st =
-                if (ext == "orc") OrcIO.statsFromFile(target, fs.getConf)
-                else FileStats.fromFooter(
-                  org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-                    fs.getConf, target,
-                    org.apache.parquet.format.converter
-                      .ParquetMetadataConverter.NO_FILTER)).serialize
-              newStats.synchronized { newStats(target.toString) = st }
-            } catch { case scala.util.control.NonFatal(_) => }
+            landing.statsOf(target, fs.getConf).foreach(st =>
+              newStats.synchronized { newStats(target.toString) = st })
             target.toString
           }.toSeq
         }
@@ -284,17 +272,16 @@ object Compact {
         // of the clock waiting on one job's tail while 31 cores idled.
         // Overlapping jobs fill the scheduler instead; per-dir isolation
         // (own tmp dir, own output stem) makes them commutative.
-        // one rewrite job per (directory × format): a mixed-landing table
+        // one rewrite job per (directory × landing): a mixed-landing table
         // clusters its parquet and ORC lineages independently, like
-        // Compact.run's per-format consolidation
+        // Compact.run's per-landing consolidation
         val dirGroups = present
-          .groupBy(f => (new Path(f).getParent,
-            f.substring(f.lastIndexOf('.') + 1)))
+          .groupBy(f => (new Path(f).getParent, Landing.ofFile(f)))
           .toSeq
         // stems and scratch dirs fixed up front and crash-registered —
         // see [[writeOutputsLedger]]
-        val plans = dirGroups.map { case ((dir, ext), files) =>
-          (dir, ext, files,
+        val plans = dirGroups.map { case ((dir, landing), files) =>
+          (dir, landing, files,
             s"compact-${java.util.UUID.randomUUID.toString.take(8)}",
             new Path(dir,
               s".cluster-${java.util.UUID.randomUUID.toString.take(8)}"))
@@ -313,9 +300,9 @@ object Compact {
             val tries =
               try scala.concurrent.Await.result(
                 scala.concurrent.Future.sequence(plans.map {
-                  case (dir, ext, files, stem, tmpOut) =>
-                    scala.concurrent.Future(
-                      scala.util.Try(rewriteDir(dir, files, ext, stem, tmpOut)))
+                  case (dir, landing, files, stem, tmpOut) =>
+                    scala.concurrent.Future(scala.util.Try(
+                      rewriteDir(dir, files, landing, stem, tmpOut)))
                 }), scala.concurrent.duration.Duration.Inf)
               finally pool.shutdown()
             tries.collectFirst { case scala.util.Failure(t) => t }
@@ -356,13 +343,12 @@ object Compact {
 
   private def doRun(
       log: CommitLog,
-      fileSystem: org.apache.hadoop.fs.FileSystem,
+      fs: org.apache.hadoop.fs.FileSystem,
       tableDir: String,
       retainMillis: Long,
       protectEpoch: Long,
       deltasOnly: Boolean,
       targetFileBytes: Long): Result = {
-    val fs = fileSystem
     purgeExpiredTrash(fs, tableDir, retainMillis)
     val allAtStart = log.manifests()
     val first = allAtStart
@@ -423,13 +409,12 @@ object Compact {
 
   private def consolidate(
       log: CommitLog,
-      fileSystem: org.apache.hadoop.fs.FileSystem,
+      fs: org.apache.hadoop.fs.FileSystem,
       tableDir: String,
       liveUnordered: Seq[CommitLog#Manifest],
       allLive: Seq[CommitLog#Manifest],
       retainMillis: Long,
       targetFileBytes: Long): Result = {
-    val fs = fileSystem
     val live = liveUnordered.sortBy(epochOrder)
     val oldFiles = live.flatMap(_.files)
     // a consolidation must CONSUME its manifests even when they list no
@@ -440,10 +425,6 @@ object Compact {
     // fixpoint loop. Only a SINGLE empty manifest short-circuits: folding
     // it would just mint a new empty manifest each cycle.
     if (oldFiles.isEmpty && live.size <= 1) return Result(0, 0, 0)
-    val raw = fs match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-      case other => other
-    }
     // a manifest-listed file deleted out from under the table (manual
     // cleanup, foreign tooling) is unrecoverable either way; consuming its
     // manifest WITHOUT it heals the table — the dangling reference
@@ -451,108 +432,37 @@ object Compact {
     // broken. (A file deleted between this check and the read below still
     // fails the cycle; the in-loop NonFatal catch retries next cycle.)
     val presentFiles = oldFiles.filter(f => fs.exists(new Path(f)))
-    // consolidate per (partition directory, landing format) so routing and
-    // per-file decode dispatch stay intact; a dir holding epochs of both
-    // formats folds into one consolidated file of each
-    val byDirExt = presentFiles.groupBy { f =>
-      (new Path(f).getParent,
-        if (f.endsWith(".parquet")) "parquet"
-        else if (f.endsWith(".orc")) "orc"
-        else "jsonl")
-    }
+    // consolidate per (partition directory, landing) so routing and
+    // per-file decode dispatch stay intact; a dir holding epochs of several
+    // landings folds into consolidated files of each
+    val byDirLanding = presentFiles.groupBy(f =>
+      (new Path(f).getParent, Landing.ofFile(f)))
     val written = scala.collection.mutable.ArrayBuffer.empty[Path]
     val newStats = scala.collection.mutable.HashMap.empty[String, String]
     // output stems are fixed BEFORE any byte is written and registered in
     // the crash ledger — see [[writeOutputsLedger]]
-    val stems = byDirExt.keys
+    val stems = byDirLanding.keys
       .map(k => k -> s"compact-${java.util.UUID.randomUUID.toString.take(8)}")
       .toMap
     val ledger = writeOutputsLedger(fs, tableDir,
       stems.map { case ((d, _), s) => s"$d/$s" }.toSeq, Seq.empty)
     val newFiles =
-      try byDirExt.flatMap { case ((dir, ext), files) =>
-        val stem = stems((dir, ext))
-        if (ext == "parquet") {
-          // row-group concat: compressed pages copied byte-for-byte — the
-          // columnar analogue of the JSONL byte-concat below. One output
-          // per distinct physical schema (name-set validation permits
-          // field-order drift across lineages; see ParquetIO.merge),
-          // split at the size target
-          val targets = ParquetIO.merge(files.map(new Path(_)),
-            i => { val t = new Path(dir, s"$stem-$i.parquet"); written += t; t },
-            fs.getConf, targetFileBytes)
-          // re-derive column stats from the consolidated footer (appendFile
-          // carries the input row groups' stats through) so plan-time file
-          // skipping survives compaction; one metadata read per output
-          targets.foreach { t =>
-            try newStats(t.toString) = FileStats.fromFooter(
-              org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-                fs.getConf, t,
-                org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER))
-              .serialize
-            catch { case scala.util.control.NonFatal(_) => } // stats are optional
-          }
-          // bloom-of-a-union = OR of blooms: a single consolidated output
-          // inherits its inputs' sidecars so point-lookup skipping
-          // survives compaction (multi-output splits decline — absence
-          // just means no bloom skip for those files)
-          Bloom.tryMergeSidecars(fs, files, targets)
-          targets.map(_.toString)
-        } else if (ext == "orc") {
-          // stripe-level concat (compressed stripes copied without decode
-          // — OrcIO.merge, the ORC analogue of the parquet row-group
-          // concat), one output per (file schema × size chunk)
-          val (targets, consumed) = OrcIO.merge(files.map(new Path(_)),
-            i => { val t = new Path(dir, s"$stem-$i.orc"); written += t; t },
-            fs.getConf, targetFileBytes)
-          // every input must end up superseded (publish deletes them all):
-          // a file the merger declined (foreign writer version /
-          // compression) is byte-copied to a fresh target instead
-          val consumedSet = consumed.map(_.toString).toSet
-          val carried = files.filterNot(consumedSet.contains).map { f =>
-            val t = new Path(dir, s"$stem-c${written.size}.orc")
-            written += t
-            org.apache.hadoop.fs.FileUtil.copy(
-              fs, new Path(f), fs, t, false, fs.getConf)
-            t
-          }
-          val outputs = targets ++ carried
-          outputs.foreach { t =>
-            try newStats(t.toString) = OrcIO.statsFromFile(t, fs.getConf)
-            catch { case scala.util.control.NonFatal(_) => } // stats optional
-          }
-          Bloom.tryMergeSidecars(fs, files, outputs)
-          outputs.map(_.toString)
-        } else {
-          // byte-concat, split at the size target on input-file boundaries
-          // (inputs end in newline, so outputs stay valid JSONL)
-          val targets = scala.collection.mutable.ArrayBuffer.empty[Path]
-          var out: org.apache.hadoop.fs.FSDataOutputStream = null
-          var outBytes = 0L
-          try {
-            val buf = new Array[Byte](1 << 16)
-            files.foreach { f =>
-              if (out != null && outBytes > 0 &&
-                  outBytes + fs.getFileStatus(new Path(f)).getLen > targetFileBytes) {
-                out.close(); out = null
-              }
-              if (out == null) {
-                val target = new Path(dir, s"$stem-${targets.size}.jsonl")
-                written += target; targets += target
-                out = raw.create(target, false)
-                outBytes = 0L
-              }
-              val in = raw.open(new Path(f))
-              try {
-                var n = in.read(buf)
-                while (n >= 0) { out.write(buf, 0, n); outBytes += n; n = in.read(buf) }
-              } finally in.close()
-            }
-          } finally if (out != null) out.close()
-          Bloom.tryMergeSidecars(fs, files, targets.toSeq)
-          targets.map(_.toString).toSeq
-        }
-      }.toSeq
+      try byDirLanding.toSeq.flatMap { case ((dir, landing), files) =>
+        val stem = stems((dir, landing))
+        // byte-level concat (JSONL bytes, parquet row groups, ORC
+        // stripes — never a decode), one output per physical schema and
+        // size chunk, each with stats re-derived from its own metadata
+        val outputs = landing.merge(fs, files.map(new Path(_)), i => {
+          val t = new Path(dir, s"$stem-$i.${landing.ext}"); written += t; t
+        }, targetFileBytes)
+        outputs.foreach { case (t, st) => st.foreach(newStats(t.toString) = _) }
+        // bloom-of-a-union = OR of blooms: a single consolidated output
+        // inherits its inputs' sidecars so point-lookup skipping survives
+        // compaction (multi-output splits decline — absence just means no
+        // bloom skip for those files)
+        Bloom.tryMergeSidecars(fs, files, outputs.map(_._1))
+        outputs.map(_._1.toString)
+      }
       catch {
         // nothing is published until the manifest commit below, so a
         // mid-consolidate failure must not leak unreferenced target files
@@ -578,14 +488,13 @@ object Compact {
     */
   private def publish(
       log: CommitLog,
-      fileSystem: org.apache.hadoop.fs.FileSystem,
+      fs: org.apache.hadoop.fs.FileSystem,
       tableDir: String,
       live: Seq[CommitLog#Manifest],
       allLive: Seq[CommitLog#Manifest],
       newFiles: Seq[String],
       newStats: Map[String, String],
       retainMillis: Long): Result = {
-    val fs = fileSystem
     val oldFiles = live.flatMap(_.files)
     // the watermark must be the max streaming epoch this compaction
     // actually COVERED (consumed ids + consumed manifests' carried

@@ -1,38 +1,36 @@
 package graft.sink
 
-import java.nio.charset.StandardCharsets
-
 import scala.collection.mutable
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{DataWriter, WriterCommitMessage}
 import org.apache.spark.sql.types.StructType
 
 /** Files written by one task, reported to the driver for the epoch commit,
-  * with each parquet file's serialized column stats ([[FileStats]]) riding
-  * along so the manifest can record them for plan-time file skipping.
+  * with each file's serialized column stats ([[FileStats]]) riding along so
+  * the manifest can record them for plan-time file skipping.
   */
 final case class GraftCommitMessage(files: Seq[String], rows: Long,
     stats: Map[String, String] = Map.empty)
     extends WriterCommitMessage
 
-/** Per-task writer: partition routing → JSON encode → batched append —
-  * the reference's `HiveStreamDataWriter.scala:72-127` pipeline on the
-  * Spark 4 connector API.
+/** Per-task writer: partition routing → encode → batched append — the
+  * reference's `HiveStreamDataWriter.scala:72-127` pipeline on the Spark 4
+  * connector API.
   *
   *  - Routing: partition values are extracted per row and select a
   *    per-partition open file (reference `:72-94` keys a writer map on the
   *    partition values; same map here, keyed by the rendered partition dir).
-  *  - Encoding: [[JsonRowEncoder]] over the non-partition columns
+  *  - Encoding: the write's [[Landing]] encodes the non-partition columns
   *    (reference `:96-100`; partition values live in the directory path,
-  *    Hive-style).
-  *  - Batching: rows are buffered and flushed every `batch.size` rows
-  *    (reference commits a Hive txn per `batch.size` rows, `:102-105`);
-  *    after `txn.per.batch` flushes the file is rotated, bounding file size
-  *    the way the reference bounds a TransactionBatch
-  *    (`HiveWriter.scala:86-91`).
+  *    Hive-style) — JSON lines by default, or parquet/ORC.
+  *  - Batching: a file rotates every `batch.size × txn.per.batch` rows,
+  *    bounding file size the way the reference bounds a TransactionBatch
+  *    (`HiveWriter.scala:86-91`); the JSONL landing also writes its buffer
+  *    every `batch.size` rows (the reference commits a Hive txn per
+  *    `batch.size` rows, `:102-105`).
   *
   * Durability model (deliberate upgrade): files become visible only through
   * the driver's epoch manifest ([[CommitLog]]), so a task that dies
@@ -49,23 +47,16 @@ final class GraftDataWriter(
     epochId: Long)
   extends DataWriter[InternalRow] with org.apache.spark.internal.Logging {
 
-  private val partIdx: Array[Int] = opts.partitionColumns.map { c =>
-    val i = schema.fieldIndex(c)
-    i
-  }.toArray
+  private val partIdx: Array[Int] =
+    opts.partitionColumns.map(schema.fieldIndex).toArray
   private val dataIdx: Seq[Int] =
     schema.fields.indices.filterNot(partIdx.contains(_))
-  // LAZY: only the jsonl landing encodes rows as JSON, and its encoder
-  // enforces the reference's scalar-only column contract at construction.
-  // The columnar landings (parquet/orc) handle nested types natively —
-  // e.g. the embed-banded dedup stream lands its `embedding` array — so
-  // the scalar check must not fire for formats that never use the encoder.
-  private lazy val encoder = new JsonRowEncoder(schema, dataIdx)
-  // jsonl is the one format that uses the encoder, and its scalar-only
-  // schema contract must fail at WRITER CONSTRUCTION (as the reference's
-  // does), not at the first written row — an all-empty-partition epoch on
-  // a nested-schema jsonl stream would otherwise commit silently.
-  if (!opts.isParquet && !opts.isOrc) { encoder; () }
+  private val landing = opts.landing
+  // the landing's column contract fails at WRITER CONSTRUCTION (as the
+  // reference's does), not at the first written row — an all-empty-partition
+  // epoch on a schema the landing cannot store would otherwise commit
+  // silently
+  landing.checkSchema(StructType(dataIdx.map(schema(_)).toArray))
 
   private val tablePath = new Path(opts.tableDir)
   // with Kerberos options configured, obtain the filesystem under the
@@ -79,48 +70,6 @@ final class GraftDataWriter(
     case None => tablePath.getFileSystem(conf)
   }
 
-  /** Data files go through the raw filesystem when `fs` layers client-side
-    * checksums (local fs): ChecksumFileSystem's output stream never
-    * propagates flush(), so the keep-alive heartbeat could not make bytes
-    * visible mid-epoch. On HDFS/S3A `fs` is already raw (server-side
-    * integrity) and this is an identity.
-    */
-  private lazy val dataFs: FileSystem = fs match {
-    case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-    case other => other
-  }
-
-  /** One open segment per partition spec (reference's per-task writer map,
-    * `HiveStreamDataWriter.scala:44,82-94`). Two landings share the
-    * lifecycle (lazy open, size-bounded rotation, commit-close,
-    * abort-discard): JSONL text (default, the reference's row-JSON shape)
-    * and columnar parquet ([[ParquetIO]], the reference's ORC analogue).
-    */
-  private sealed trait Segment {
-    def write(row: InternalRow): Unit
-    def close(): Unit
-    def discard(): Unit
-    /** Push buffered rows toward durability mid-epoch (A11 keep-alive). */
-    def heartbeatFlush(): Unit
-
-    /** Bloom sidecar accumulator ([[Bloom.Running]]), shared by all three
-      * landings: observe the FULL row (pre-projection — bloom columns
-      * resolve against the stream schema) per write, snapshot to
-      * `<file>.bloom` at every file close/rotation.
-      */
-    protected val bloom: Option[Bloom.Running] =
-      if (opts.bloomColumns.isEmpty) None
-      else Some(new Bloom.Running(schema, opts.bloomColumns, opts.bloomBits))
-
-    protected def writeBloomSidecar(dataFile: String): Unit =
-      bloom.foreach(b => Bloom.write(fs, dataFile, b.snapshotAndReset()))
-  }
-
-  private def newSegment(partDir: String): Segment =
-    if (opts.isParquet) new ParquetSegment(partDir)
-    else if (opts.isOrc) new OrcSegment(partDir)
-    else new JsonlSegment(partDir)
-
   private def segmentDir(partDir: String): Path = {
     val dir = if (partDir.isEmpty) tablePath else new Path(tablePath, partDir)
     if (!opts.autoCreatePartitions && partDir.nonEmpty && !fs.exists(dir)) {
@@ -132,216 +81,63 @@ final class GraftDataWriter(
     dir
   }
 
-  // uid makes names collision-free under epoch replay / task retry with
-  // reused ids; visibility is governed by the manifest, not the name
-  private def segmentFile(dir: Path, seq: Int, ext: String): Path =
-    new Path(dir, f"part-e$epochId-p$partitionId%05d-t$taskId-$uid-$seq%04d.$ext")
-
-  /** Columnar landing: rows stream into a snappy parquet file through
-    * Spark's own `InternalRow` write support. Batching differs from JSONL
-    * by necessity — a parquet file cannot flush mid-write (pages live in
-    * the writer's buffer until a row group completes), so `batch.size ×
-    * txn.per.batch` bounds ROWS PER FILE (the same rotation ceiling the
-    * JSONL path reaches via flushes-per-file) and the keep-alive is a
-    * no-op.
+  /** One open segment per partition spec (reference's per-task writer map,
+    * `HiveStreamDataWriter.scala:44,82-94`), one lifecycle for every
+    * landing: lazy open, rotation at `batch.size × txn.per.batch` rows per
+    * file (the ceiling the reference's TransactionBatch puts on a file,
+    * `HiveWriter.scala:86-91`), stats and the bloom sidecar at close,
+    * discard on abort. The landing supplies the file writer.
     */
-  private final class ParquetSegment(partDir: String) extends Segment {
-    private val dataSchema = StructType(dataIdx.map(schema(_)).toArray)
-    private val project = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-      .create(dataIdx.map(i => org.apache.spark.sql.catalyst.expressions
-        .BoundReference(i, schema(i).dataType, nullable = true)).toArray)
+  private final class Segment(partDir: String) {
+    private val openFile = landing.fileWriters(schema, dataIdx, opts, conf,
+      Landing.raw(fs))
     private val maxRowsPerFile = opts.batchSize.toLong * opts.txnPerBatch
-    // pin the writer conf ONCE per segment: the schema is fixed for the
-    // segment's lifetime, and the Configuration copy-walk is pure per-file
-    // overhead when repeated across thousands of streaming rotations
-    private val pinned = ParquetIO.pinnedWriterConf(conf, dataSchema)
-    private var writer: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
+    // bloom sidecar accumulator ([[Bloom.Running]]): observes the FULL row
+    // (bloom columns resolve against the stream schema), snapshotted to
+    // `<file>.bloom` at every file close
+    private val bloom: Option[Bloom.Running] =
+      if (opts.bloomColumns.isEmpty) None
+      else Some(new Bloom.Running(schema, opts.bloomColumns, opts.bloomBits))
+    private var writer: Landing.FileWriter = _
     private var file: Path = _
     private var rowsInFile = 0L
     private var seq = 0
 
+    // uid makes names collision-free under epoch replay / task retry with
+    // reused ids; visibility is governed by the manifest, not the name
     private def open(): Unit = {
-      file = segmentFile(segmentDir(partDir), seq, "parquet")
-      // like the ORC landing: bloom.columns also records native
-      // per-row-group blooms (partition columns are path-only, filtered)
-      writer = ParquetIO.createWriterPinned(file, pinned,
-        bloomColumns = opts.bloomColumns.filter(dataSchema.fieldNames.contains))
+      file = new Path(segmentDir(partDir),
+        f"part-e$epochId-p$partitionId%05d-t$taskId-$uid-$seq%04d.${landing.ext}")
+      files += file.toString
+      writer = openFile(file)
       seq += 1
       rowsInFile = 0L
-      files += file.toString
     }
 
-    /** Close the open file and record its column stats from the footer the
-      * writer just built in memory — zero extra IO, and the stats land in
-      * the epoch manifest for plan-time file skipping.
-      */
     private def closeFile(): Unit = {
-      writer.close()
-      statsByFile(file.toString) =
-        FileStats.fromFooter(writer.getFooter).serialize
-      writeBloomSidecar(file.toString)
+      statsByFile(file.toString) = writer.close()
+      bloom.foreach(b => Bloom.write(fs, file.toString, b.snapshotAndReset()))
       writer = null
     }
 
-    override def write(row: InternalRow): Unit = {
+    def write(row: InternalRow): Unit = {
       if (writer == null) open()
-      writer.write(project(row))
+      writer.write(row)
       bloom.foreach(_.observe(row))
       rowsInFile += 1
       if (rowsInFile >= maxRowsPerFile) closeFile()
     }
 
-    override def close(): Unit =
-      if (writer != null) closeFile()
-
-    override def discard(): Unit =
-      if (writer != null) {
-        try writer.close() catch { case _: Throwable => }
-        writer = null
-      }
-
-    override def heartbeatFlush(): Unit = ()
-  }
-
-  /** ORC landing — the reference's LITERAL storage format (`stored as
-    * orc`, `HiveStreamingExample.scala:26-31`). Same lifecycle as the
-    * parquet segment: size-bounded rotation by rows-per-file, stats from
-    * the writer's in-memory file statistics at close, no mid-file flush
-    * (keep-alive is rejected at option parse).
-    */
-  private final class OrcSegment(partDir: String) extends Segment {
-    private val dataSchema = StructType(dataIdx.map(schema(_)).toArray)
-    private val project = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-      .create(dataIdx.map(i => org.apache.spark.sql.catalyst.expressions
-        .BoundReference(i, schema(i).dataType, nullable = true)).toArray)
-    private val maxRowsPerFile = opts.batchSize.toLong * opts.txnPerBatch
-    private var writer: OrcIO.RowWriter = _
-    private var file: Path = _
-    private var rowsInFile = 0L
-    private var seq = 0
-
-    private def open(): Unit = {
-      file = segmentFile(segmentDir(partDir), seq, "orc")
-      writer = new OrcIO.RowWriter(file, dataSchema, conf,
-        bloomColumns = opts.bloomColumns)
-      seq += 1
-      rowsInFile = 0L
-      files += file.toString
-    }
-
-    private def closeFile(): Unit = {
-      statsByFile(file.toString) = writer.closeWithStats()
-      writeBloomSidecar(file.toString)
-      writer = null
-    }
-
-    override def write(row: InternalRow): Unit = {
-      if (writer == null) open()
-      writer.write(project(row))
-      bloom.foreach(_.observe(row))
-      rowsInFile += 1
-      if (rowsInFile >= maxRowsPerFile) closeFile()
-    }
-
-    override def close(): Unit =
-      if (writer != null) closeFile()
-
-    override def discard(): Unit =
-      if (writer != null) {
-        writer.abort()
-        writer = null
-      }
-
-    override def heartbeatFlush(): Unit = ()
-  }
-
-  private final class JsonlSegment(partDir: String) extends Segment {
-    var file: Path = _
-    var out: FSDataOutputStream = _
-    // 64 KiB row buffers are recycled across tasks/epochs through the
-    // executor-singleton pool — the reference's writer-reuse pattern
-    // (CachedHiveWriters) applied to the resource that is actually
-    // long-lived here (the per-epoch files themselves must close at commit)
-    val buf: StringBuilder = GraftDataWriter.bufferPool.getOrCreate(GraftDataWriter.BufKey)
-    private var recycled = false
-    // per-file column stats for manifest-level skipping — the encoder walks
-    // every value anyway; parquet segments get these from the footer
-    private val stats = new FileStats.Running(schema, dataIdx)
-    private var rowsInFile = 0L
-    var rowsInBuf = 0
-    var flushes = 0
-    var seq = 0
-
-    def open(): Unit = {
-      file = segmentFile(segmentDir(partDir), seq, "jsonl")
-      out = dataFs.create(file, false)
-      seq += 1
-      flushes = 0
-      rowsInFile = 0L
-      files += file.toString
-    }
-
-    override def write(row: InternalRow): Unit = {
-      if (out == null) open()
-      encoder.encode(row, buf)
-      buf.append('\n')
-      stats.observe(row)
-      bloom.foreach(_.observe(row))
-      rowsInFile += 1
-      rowsInBuf += 1
-      if (rowsInBuf >= opts.batchSize) flush()
-    }
-
-    def flush(): Unit = if (rowsInBuf > 0) {
-      out.write(buf.toString.getBytes(StandardCharsets.UTF_8))
-      buf.clear()
-      rowsInBuf = 0
-      flushes += 1
-      if (flushes >= opts.txnPerBatch) rotate()
-    }
-
-    // lazy rotation: close now, reopen on the next write — avoids trailing
-    // empty files when the batch ends exactly on a rotation boundary
-    def rotate(): Unit = {
-      out.close(); out = null
-      statsByFile(file.toString) = stats.snapshotAndReset(rowsInFile)
-      writeBloomSidecar(file.toString)
-    }
-
-    override def close(): Unit = {
-      flush()
-      if (out != null) {
-        out.close(); out = null
-        statsByFile(file.toString) = stats.snapshotAndReset(rowsInFile)
-        writeBloomSidecar(file.toString)
-      }
-      recycleBuf()
-    }
-
-    override def heartbeatFlush(): Unit = if (out != null) {
-      flush()
-      // flush() may have rotated (lazy rotation nulls the stream)
-      if (out != null) out.hflush()
-    }
-
-    /** Abort path: drop buffered rows and close WITHOUT flushing, so the
-      * mandatory `DataWriter.close()` after `abort()` cannot write into a
-      * closed stream.
+    /** Push buffered rows toward durability mid-epoch (A11 keep-alive);
+      * never rotates.
       */
-    override def discard(): Unit = {
-      rowsInBuf = 0
-      buf.clear()
-      if (out != null) {
-        try out.close() catch { case _: Throwable => }
-        out = null
-      }
-      recycleBuf()
-    }
+    def flush(): Unit = if (writer != null) writer.flush()
 
-    private def recycleBuf(): Unit = if (!recycled) {
-      recycled = true
-      buf.clear()
-      GraftDataWriter.bufferPool.recycle(GraftDataWriter.BufKey, buf)
+    def close(): Unit = if (writer != null) closeFile()
+
+    def discard(): Unit = if (writer != null) {
+      writer.abort()
+      writer = null
     }
   }
 
@@ -384,7 +180,7 @@ final class GraftDataWriter(
         })
       ex.scheduleWithFixedDelay(() => try {
         GraftDataWriter.this.synchronized {
-          segments.values.foreach(_.heartbeatFlush())
+          segments.values.foreach(_.flush())
         }
       } catch {
         case t: Throwable => logWarning("keep-alive flush failed", t)
@@ -395,7 +191,7 @@ final class GraftDataWriter(
 
   override def write(row: InternalRow): Unit = synchronized {
     val dir = partDirFor(row)
-    segments.getOrElseUpdate(dir, newSegment(dir)).write(row)
+    segments.getOrElseUpdate(dir, new Segment(dir)).write(row)
     rowCount += 1
   }
 
@@ -417,7 +213,7 @@ final class GraftDataWriter(
   override def abort(): Unit = synchronized {
     heartbeat.foreach(_.shutdown())
     segments.values.foreach(_.discard())
-    // both landings create through the raw fs (no .crc sidecars exist);
+    // every landing creates through the raw fs (no .crc sidecars exist);
     // deleting through the checksum-layered `fs` is still correct — it
     // removes a sidecar if one exists and the data file either way
     files.foreach { p =>
@@ -433,16 +229,4 @@ final class GraftDataWriter(
     heartbeat.foreach(_.shutdown())
     segments.values.foreach(_.close())
   }
-}
-
-object GraftDataWriter {
-  private[sink] val BufKey = "row-buffer"
-
-  /** Executor-singleton pool of row buffers, expiring idle entries after
-    * 10 minutes — the reference's `CachedHiveWriters` lifecycle
-    * (getOrCreate/recycle/timed sweep/shutdown hook) on the JVM-long-lived
-    * resource of this sink.
-    */
-  private[sink] val bufferPool =
-    new WriterPool[String, StringBuilder](_ => new StringBuilder(1 << 16), _ => ())
 }

@@ -1,8 +1,5 @@
 package graft.sink
 
-import java.io.{BufferedReader, InputStreamReader}
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -105,20 +102,18 @@ final class GraftScan(
       GraftInputPartition(f, parts): InputPartition
     }.toArray
 
-  /** Columnar (vectorized) batches when EVERY planned file is parquet
-    * (Spark's vectorized parquet decoder) or EVERY planned file is ORC
-    * (the [[OrcIO.OrcSparkColumnVector]] views over hive batches — r15)
-    * and the projection is batch-decodable. Spark requires a scan's
-    * partitions to be uniformly columnar or row-based, so one JSONL
-    * epoch — or a parquet/ORC mix — keeps the whole scan on the row
-    * path.
+  /** Columnar (vectorized) batches when every planned file belongs to ONE
+    * landing whose columnar reader serves the projection (Spark's
+    * vectorized parquet decoder, or the [[OrcIO.OrcSparkColumnVector]]
+    * views over hive batches). Spark requires a scan's partitions to be
+    * uniformly columnar or row-based, so one JSONL epoch — or a
+    * parquet/ORC mix — keeps the whole scan on the row path.
     */
   private[sink] lazy val columnar: Boolean =
-    plannedFiles.nonEmpty && requiredSchema.nonEmpty &&
-      ((plannedFiles.forall(_._1.endsWith(".parquet")) &&
-          ParquetIO.batchReadSupported(requiredSchema)) ||
-        (plannedFiles.forall(_._1.endsWith(".orc")) &&
-          OrcIO.batchReadSupported(requiredSchema)))
+    plannedFiles.nonEmpty && requiredSchema.nonEmpty && {
+      val landings = plannedFiles.map(f => Landing.ofFile(f._1)).distinct
+      landings.size == 1 && landings.head.batchReadSupported(requiredSchema)
+    }
 
   override def createReaderFactory(): PartitionReaderFactory =
     GraftReaderFactory(requiredSchema,
@@ -147,9 +142,7 @@ final case class GraftReaderFactory(
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val p = partition.asInstanceOf[GraftInputPartition]
-    if (p.file.endsWith(".orc"))
-      new GraftOrcColumnarReader(p, requiredSchema, conf, filters)
-    else new GraftColumnarReader(p, requiredSchema, conf, filters)
+    Landing.ofFile(p.file).columnarReader(p, requiredSchema, conf, filters)
   }
 }
 
@@ -306,22 +299,11 @@ final class GraftOrcColumnarReader(
   private val reader = new OrcIO.BatchReader(
     new Path(partition.file), fileSchema, conf.value, filters.toSeq)
 
-  private def constantFor(f: org.apache.spark.sql.types.StructField)
+  private def constant(f: org.apache.spark.sql.types.StructField, value: Any)
       : ConstantColumnVector = {
-    import org.apache.spark.sql.types._
     val v = new ConstantColumnVector(reader.batch.getMaxSize, f.dataType)
-    GraftPartitionReader.fromPathString(
-      partition.partitionValues(f.name), f.dataType) match {
-      case null => v.setNull()
-      case s: UTF8String => v.setUtf8String(s)
-      case i: java.lang.Integer => v.setInt(i)
-      case l: java.lang.Long => v.setLong(l)
-      case sh: java.lang.Short => v.setShort(sh)
-      case b: java.lang.Byte => v.setByte(b)
-      case bo: java.lang.Boolean => v.setBoolean(bo)
-      case other => throw new IllegalStateException(
-        s"unexpected partition value $other for ${f.dataType}")
-    }
+    org.apache.spark.sql.execution.vectorized.ColumnVectorUtils.populate(
+      v, new GenericInternalRow(Array[Any](value)), 0)
     v
   }
 
@@ -330,12 +312,10 @@ final class GraftOrcColumnarReader(
   private val vectors: Array[org.apache.spark.sql.vectorized.ColumnVector] = {
     val fileViews = fileSchema.fieldNames.zip(reader.vectors).toMap
     requiredSchema.fields.map { f =>
-      if (partition.partitionValues.contains(f.name)) constantFor(f)
-      else fileViews(f.name) match {
-        case Some(view) => view
-        case None =>
-          val v = new ConstantColumnVector(reader.batch.getMaxSize, f.dataType)
-          v.setNull(); v
+      partition.partitionValues.get(f.name) match {
+        case Some(pv) =>
+          constant(f, GraftPartitionReader.fromPathString(pv, f.dataType))
+        case None => fileViews(f.name).getOrElse(constant(f, null))
       }
     }
   }
@@ -371,61 +351,15 @@ final class GraftPartitionReader(
     .map(_._2)
   private val path = new Path(partition.file)
 
-  /** Per-file row decode, dispatched on the committed file's extension so a
-    * table may mix JSONL and parquet epochs (the landing format is a
-    * per-write option). Returns null at EOF.
-    */
-  private sealed trait RowSource {
-    def nextRow(): InternalRow
-    def close(): Unit
-  }
-
-  private final class JsonlSource extends RowSource {
-    private val decoder = new JsonRowDecoder(fileSchema)
-    private val in = {
-      val fs = path.getFileSystem(conf.value)
-      new BufferedReader(new InputStreamReader(fs.open(path), StandardCharsets.UTF_8))
-    }
-    override def nextRow(): InternalRow = {
-      // skip blank lines rather than treating one as EOF: the encoder never
-      // emits them, but a manually-repaired or foreign file must not
-      // silently truncate every row after the first blank
-      var line = in.readLine()
-      while (line != null && line.isEmpty) line = in.readLine()
-      if (line == null) null else decoder.decode(line)
-    }
-    override def close(): Unit = in.close()
-  }
-
-  /** Columnar scan: `fileSchema` is pushed into the parquet read, so only
-    * the projected columns' chunks are decoded ([[ParquetIO.createReader]]).
-    */
-  private final class ParquetSource extends RowSource {
-    private val reader = ParquetIO.createReader(path, fileSchema, conf.value)
-    override def nextRow(): InternalRow = reader.read()
-    override def close(): Unit = reader.close()
-  }
-
-  /** ORC scan: like parquet, `fileSchema` drives an include mask pushed
-    * into the ORC read, so only projected streams are decoded, and the
-    * pushed filters become a SearchArgument for stripe/row-group skipping
-    * ([[OrcIO.RowReader]]).
-    */
-  private final class OrcSource extends RowSource {
-    private val reader = new OrcIO.RowReader(path, fileSchema, conf.value,
-      filters.toSeq)
-    override def nextRow(): InternalRow = reader.read()
-    override def close(): Unit = reader.close()
-  }
-
-  private val source: RowSource =
-    if (partition.file.endsWith(".parquet")) new ParquetSource
-    else if (partition.file.endsWith(".orc")) new OrcSource
-    else new JsonlSource
+  // per-file decode through the file's own landing, so a table may mix
+  // epochs of every landing (the format is a per-write option); the ORC
+  // reader also turns the pushed filters into stripe/row-group skipping
+  private val source = Landing.ofFile(partition.file)
+    .rowReader(path, fileSchema, conf.value, filters.toSeq)
   private var current: InternalRow = _
 
   override def next(): Boolean = {
-    val fileRow = source.nextRow()
+    val fileRow = source.read()
     if (fileRow == null) { current = null; false }
     else {
       val values = new Array[Any](requiredSchema.length)
@@ -465,12 +399,8 @@ object GraftPartitionReader {
     }
   }
 
-  /** [[unsanitize]] for the other percent-encoded consumers (manifest
-    * stats tokens share the path encoding).
-    */
-  private[sink] def unsanitizePublic(s: String): String = unsanitize(s)
-
-  private def unsanitize(s: String): String = {
+  /** Inverse of the path percent-encoding (manifest stats tokens share it). */
+  private[sink] def unsanitize(s: String): String = {
     val sb = new java.lang.StringBuilder(s.length)
     var i = 0
     while (i < s.length) {

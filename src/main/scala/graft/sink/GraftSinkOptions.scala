@@ -39,12 +39,9 @@ final case class GraftSinkOptions(
     keytab: Option[String] = None,
     keepaliveIntervalMs: Long = 0L,
     commitEpoch: Option[Long] = None,
-    format: String = GraftSinkOptions.FORMAT_JSONL,
+    landing: Landing = Landing.Jsonl,
     bloomColumns: Seq[String] = Seq.empty,
     bloomBits: Int = Bloom.DefaultBits) {
-
-  def isParquet: Boolean = format == GraftSinkOptions.FORMAT_PARQUET
-  def isOrc: Boolean = format == GraftSinkOptions.FORMAT_ORC
 
   /** Table root directory: `<path>/<db>.<table>` */
   def tableDir: String = s"$path/$db.$table"
@@ -104,19 +101,19 @@ object GraftSinkOptions {
   val BLOOM_COLUMNS = "bloom.columns"
   val BLOOM_BITS = "bloom.bits"
 
-  /** Landing format for data files. `jsonl` is the reference-shaped default
-    * (row-at-a-time JSON text, `HiveStreamDataWriter.scala:96-100`);
-    * `parquet` lands columnar files — the Spark-native analogue of the
-    * reference's ORC storage (`HiveStreamingExample.scala:26-31`); `orc`
-    * lands the reference's LITERAL format for migrating deployments
-    * ([[OrcIO]]). The format is a per-WRITE choice: readers dispatch on
-    * each committed file's extension, so a table may mix epochs of all
-    * three.
+  /** Landing format for data files ([[Landing]]): `jsonl` is the
+    * reference-shaped default (row-at-a-time JSON text,
+    * `HiveStreamDataWriter.scala:96-100`); `parquet` lands columnar files —
+    * the Spark-native analogue of the reference's ORC storage
+    * (`HiveStreamingExample.scala:26-31`); `orc` lands the reference's
+    * LITERAL format for migrating deployments ([[OrcIO]]). The format is a
+    * per-WRITE choice: readers dispatch on each committed file's extension,
+    * so a table may mix epochs of all three.
     */
   val FORMAT = "format"
-  val FORMAT_JSONL = "jsonl"
-  val FORMAT_PARQUET = "parquet"
-  val FORMAT_ORC = "orc"
+  val FORMAT_JSONL: String = Landing.Jsonl.name
+  val FORMAT_PARQUET: String = Landing.Parquet.name
+  val FORMAT_ORC: String = Landing.Orc.name
 
   /** Parse + validate, with the reference's required-option error behavior
     * (`HiveOptions.scala:90-103` throws IllegalArgumentException listing the
@@ -158,22 +155,17 @@ object GraftSinkOptions {
         }
       case _ =>
     }
-    val format = Option(options.get(FORMAT)).map(_.trim.toLowerCase)
-      .getOrElse(FORMAT_JSONL) match {
-        case f @ (FORMAT_JSONL | FORMAT_PARQUET | FORMAT_ORC) => f
-        case other => throw new IllegalArgumentException(
-          s"Option '$FORMAT' must be one of: $FORMAT_JSONL, " +
-            s"$FORMAT_PARQUET, $FORMAT_ORC; got '$other'")
-      }
+    val landing = Option(options.get(FORMAT)).map(Landing.forOption)
+      .getOrElse(Landing.Jsonl)
     val keepalive = options.getLong(KEEPALIVE_INTERVAL_MS, 0L)
-    // a parquet file cannot flush mid-write (pages buffer until a row
+    // a columnar file cannot flush mid-write (pages buffer until a row
     // group completes), so the A11 keep-alive would be a silent no-op —
     // reject the combination instead of letting a user believe their
     // long-epoch rows are durable mid-epoch
-    if (format != FORMAT_JSONL && keepalive > 0) {
+    if (!landing.flushesMidFile && keepalive > 0) {
       throw new IllegalArgumentException(
         s"Option '$KEEPALIVE_INTERVAL_MS' is not supported with " +
-          s"$FORMAT='$format': columnar segments cannot flush " +
+          s"$FORMAT='${landing.name}': columnar segments cannot flush " +
           "mid-file. Use the jsonl landing for mid-epoch durability, or " +
           "drop the keep-alive (epoch-scoped durability needs none).")
     }
@@ -190,7 +182,7 @@ object GraftSinkOptions {
       keytab = keytab,
       keepaliveIntervalMs = keepalive,
       commitEpoch = Option(options.get(COMMIT_EPOCH)).map(_.toLong),
-      format = format,
+      landing = landing,
       bloomColumns = Option(options.get(BLOOM_COLUMNS))
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
         .getOrElse(Seq.empty),

@@ -138,13 +138,9 @@ object OrcIO {
     private val td = typeDescription(schema)
     private val fillers: Array[Filler] = schema.fields.map(f => fillerFor(f.dataType))
     private val writer = {
-      val fs = path.getFileSystem(conf) match {
-        case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-        case other => other
-      }
       var opts = OrcFile.writerOptions(conf)
         .setSchema(td)
-        .fileSystem(fs)
+        .fileSystem(Landing.raw(path.getFileSystem(conf)))
         .compress(org.apache.orc.CompressionKind.SNAPPY)
         .stripeSize(16L * 1024 * 1024)
         .useUTCTimestamp(true)
@@ -177,8 +173,6 @@ object OrcIO {
       writer.addRowBatch(batch)
       batch.reset()
     }
-
-    def rowCount: Long = rows
 
     /** Close and return the file's serialized column stats, mapped from
       * the writer's in-memory file statistics — zero extra IO, the ORC
@@ -295,7 +289,8 @@ object OrcIO {
 
   final class RowReader(path: Path, requestedSchema: StructType,
       conf: Configuration,
-      filters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty) {
+      filters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty)
+    extends Landing.RowReader {
     private val o = new OpenedOrc(path, requestedSchema, conf, filters)
     private val fileCol = o.fileCol
     private val extractors: Array[Extractor] =
@@ -305,7 +300,7 @@ object OrcIO {
     private var pos = 0
 
     /** Next row, or null at EOF. */
-    def read(): InternalRow = {
+    override def read(): InternalRow = {
       if (pos >= batch.size) {
         if (!rows.nextBatch(batch)) return null
         // same dense-batch assumption as [[BatchReader.nextBatch]]
@@ -330,7 +325,7 @@ object OrcIO {
       new GenericInternalRow(values)
     }
 
-    def close(): Unit = { rows.close(); o.reader.close() }
+    override def close(): Unit = { rows.close(); o.reader.close() }
   }
 
   /** Scalar types the columnar ORC adapter serves — the sink's own write
@@ -636,44 +631,40 @@ object OrcIO {
   /** Stripe-level merge of ORC files (compressed stripes copied without
     * decode — the ORC analogue of `ParquetIO.merge`). Inputs are grouped
     * by file schema (name-set validation permits drift across lineages),
-    * each group size-bounded into chunks on input boundaries, and each
-    * chunk merged via `OrcFile.mergeFiles`. A file the merger rejects
-    * (incompatible compression/version) stays live unmerged rather than
-    * failing the cycle.
+    * each group size-bounded into chunks on input boundaries
+    * ([[Landing.chunkBySize]]), and each chunk merged via
+    * `OrcFile.mergeFiles`. A file the merger rejects (incompatible
+    * compression/version) is byte-copied to its own output instead, so
+    * every input's rows end up in exactly one output; a chunk the merger
+    * rejects whole writes no file and yields no output.
     *
-    * @return (written target paths, input paths actually consumed)
+    * @return the written target paths.
     */
   def merge(inputs: Seq[Path], targetFor: Int => Path, conf: Configuration,
-      targetBytes: Long = Long.MaxValue): (Seq[Path], Seq[Path]) = {
+      targetBytes: Long = Long.MaxValue): Seq[Path] = {
     require(inputs.nonEmpty, "nothing to merge")
     val bySchema = inputs.map { p =>
       val r = OrcFile.createReader(p, OrcFile.readerOptions(conf))
       try (p, r.getSchema.toString, r.getContentLength)
       finally r.close()
     }.groupBy(_._2).values.toSeq
-    var outIdx = -1
-    val written = scala.collection.mutable.ArrayBuffer.empty[Path]
-    val consumed = scala.collection.mutable.ArrayBuffer.empty[Path]
-    bySchema.foreach { group =>
-      // greedy size chunking on input boundaries, like ParquetIO.merge
-      val chunks = group.foldLeft((Vector.empty[Vector[(Path, String, Long)]], 0L)) {
-        case ((acc, bytes), in @ (_, _, sz)) =>
-          if (acc.nonEmpty && acc.last.nonEmpty && bytes + sz > targetBytes)
-            (acc :+ Vector(in), sz)
-          else if (acc.isEmpty) (Vector(Vector(in)), sz)
-          else (acc.init :+ (acc.last :+ in), bytes + sz)
-      }._1
-      chunks.foreach { chunk =>
-        outIdx += 1
-        val target = targetFor(outIdx)
-        val merged = OrcFile.mergeFiles(target,
+    val merged = bySchema
+      .flatMap(group => Landing.chunkBySize(group,
+        (in: (Path, String, Long)) => in._3, targetBytes))
+      .zipWithIndex.map { case (chunk, i) =>
+        val target = targetFor(i)
+        target -> OrcFile.mergeFiles(target,
           OrcFile.writerOptions(conf).useUTCTimestamp(true),
-          chunk.map(_._1).asJava)
-        written += target
-        consumed ++= merged.asScala
+          chunk.map(_._1).asJava).asScala.toSeq
       }
+    val consumed = merged.flatMap(_._2).toSet
+    val carried = inputs.filterNot(consumed).zipWithIndex.map { case (p, k) =>
+      val t = targetFor(merged.size + k)
+      val fs = p.getFileSystem(conf)
+      org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, t, false, conf)
+      t
     }
-    (written.toSeq, consumed.toSeq)
+    merged.collect { case (t, ins) if ins.nonEmpty => t } ++ carried
   }
 
   /** Re-derive manifest stats for a merged file from its footer metadata

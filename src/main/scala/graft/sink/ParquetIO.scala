@@ -42,16 +42,13 @@ object ParquetIO {
     * (CORRECTED) dates/timestamps as int64 micros; `init` of both Spark
     * write- and read-support asserts these keys are present.
     *
-    * Public so a writer with a fixed schema (one segment of a streaming
-    * task) pins ONCE and reuses the result across file rotations — a
+    * A writer with a fixed schema (one segment of a streaming task) pins
+    * ONCE and reuses the result across file rotations — a
     * `new Configuration(base)` copy walks every property of the base conf,
     * which is pure per-file overhead when repeated for thousands of small
     * streaming segments.
     */
-  def pinnedWriterConf(base: Configuration, schema: StructType): Configuration =
-    pinnedConf(base, schema)
-
-  private def pinnedConf(base: Configuration, schema: StructType): Configuration = {
+  def pinnedWriterConf(base: Configuration, schema: StructType): Configuration = {
     import org.apache.spark.sql.internal.SQLConf
     val conf = new Configuration(base)
     ParquetWriteSupport.setSchema(schema, conf)
@@ -74,14 +71,8 @@ object ParquetIO {
   }
 
   /** OutputFile over an EXPLICIT filesystem instead of
-    * `path.getFileSystem(conf)` — so segment writes can go through the raw
-    * fs when the resolved one layers client-side checksums (local fs).
-    * Measured on the streaming-segment shape (88 × ~11 k-row files): the
-    * checksummed create+close is ~12 ms/file — the dominant per-file cost,
-    * 3× the parquet encode itself — because every segment becomes two files
-    * (data + .crc sidecar) plus redundant client-side checksumming. On
-    * HDFS/S3A the resolved fs is already raw (server-side integrity) and
-    * this changes nothing. Mirrors the JSONL path's `dataFs`.
+    * `path.getFileSystem(conf)`, so segment writes go through the raw fs
+    * ([[Landing.raw]]) when the resolved one layers client-side checksums.
     */
   private final class RawFsOutputFile(fs: org.apache.hadoop.fs.FileSystem, path: Path)
     extends org.apache.parquet.io.OutputFile {
@@ -94,24 +85,11 @@ object ParquetIO {
     override def getPath: String = path.toString
   }
 
-  private def rawFs(path: Path, conf: Configuration): org.apache.hadoop.fs.FileSystem =
-    path.getFileSystem(conf) match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-      case other => other
-    }
-
-  /** One open parquet segment. `rowGroupSize` is deliberately small
-    * (16 MiB) for a STREAMING writer: an epoch's worth of one partition's
-    * rows is typically far below the 128 MiB batch default, and a row group
-    * buffers entirely in executor memory until flushed.
-    */
-  def createWriter(
-      path: Path, schema: StructType, conf: Configuration): ParquetWriter[InternalRow] =
-    createWriterPinned(path, pinnedConf(conf, schema))
-
-  /** Same, but over an ALREADY-PINNED conf ([[pinnedWriterConf]]) — a
-    * fixed-schema caller (one streaming segment) pins once and skips the
-    * per-file Configuration walk across rotations.
+  /** One open parquet segment file over a conf from [[pinnedWriterConf]].
+    * `rowGroupSize` is deliberately small (16 MiB) for a STREAMING writer:
+    * an epoch's worth of one partition's rows is typically far below the
+    * 128 MiB batch default, and a row group buffers entirely in executor
+    * memory until flushed.
     *
     * `bloomColumns` (r15, the parquet twin of the ORC writer blooms):
     * native per-row-group bloom filters for the named columns, so the
@@ -122,10 +100,11 @@ object ParquetIO {
     * skipping tiers on both columnar formats (manifest sidecar at plan
     * time, native bloom inside opened files).
     */
-  def createWriterPinned(
+  def createWriter(
       path: Path, pinned: Configuration,
       bloomColumns: Seq[String] = Seq.empty): ParquetWriter[InternalRow] = {
-    var b = new RowWriterBuilder(new RawFsOutputFile(rawFs(path, pinned), path))
+    var b = new RowWriterBuilder(
+        new RawFsOutputFile(Landing.raw(path.getFileSystem(pinned)), path))
       .withConf(pinned)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .withWriteMode(ParquetFileWriter.Mode.CREATE)
@@ -141,11 +120,20 @@ object ParquetIO {
   def createReader(
       path: Path, requestedSchema: StructType,
       conf: Configuration): ParquetReader[InternalRow] = {
+    // no-arg ParquetReadSupport pins datetimeRebase=CORRECTED — the mode
+    // every file this sink writes was written with
+    ParquetReader.builder(new ParquetReadSupport(), path)
+      .withConf(readConf(conf, requestedSchema)).build()
+  }
+
+  /** Read conf requesting `schema`, with the defaults the parquet→catalyst
+    * schema converter asserts are present (its Configuration ctor does a
+    * bare .toBoolean on each).
+    */
+  private def readConf(conf: Configuration, schema: StructType): Configuration = {
     import org.apache.spark.sql.internal.SQLConf
     val c = new Configuration(conf)
-    c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requestedSchema.json)
-    // the parquet→catalyst schema converter asserts these are present (its
-    // Configuration ctor does a bare .toBoolean on each); pin defaults
+    c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
     Seq(SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_BINARY_AS_STRING,
       SQLConf.PARQUET_INT96_AS_TIMESTAMP, SQLConf.PARQUET_FIELD_ID_READ_ENABLED,
       SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
@@ -153,9 +141,7 @@ object ParquetIO {
       SQLConf.PARQUET_IGNORE_VARIANT_ANNOTATION,
       SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION)
       .foreach(e => c.set(e.key, e.defaultValueString))
-    // no-arg ParquetReadSupport pins datetimeRebase=CORRECTED — the mode
-    // every file this sink writes was written with
-    ParquetReader.builder(new ParquetReadSupport(), path).withConf(c).build()
+    c
   }
 
   /** VECTORIZED batch reader over one sink parquet file — Spark's own
@@ -164,7 +150,7 @@ object ParquetIO {
     * `ColumnVector`s, rows are never materialized, and downstream
     * whole-stage codegen consumes the batches directly. Partition columns
     * are appended as constant vectors via `initBatch`. Rebase pins match
-    * [[createWriter]] (CORRECTED / UTC), so the files this sink writes
+    * [[pinnedWriterConf]] (CORRECTED / UTC), so the files this sink writes
     * round-trip bit-exactly.
     */
   def createVectorizedReader(
@@ -173,18 +159,9 @@ object ParquetIO {
       conf: Configuration,
       filters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty)
       : org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader = {
-    import org.apache.spark.sql.internal.SQLConf
-    val c = new Configuration(conf)
-    c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, fileSchema.json)
+    val c = readConf(conf, fileSchema)
     c.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
       classOf[ParquetReadSupport].getName)
-    Seq(SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_BINARY_AS_STRING,
-      SQLConf.PARQUET_INT96_AS_TIMESTAMP, SQLConf.PARQUET_FIELD_ID_READ_ENABLED,
-      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
-      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG,
-      SQLConf.PARQUET_IGNORE_VARIANT_ANNOTATION,
-      SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION)
-      .foreach(e => c.set(e.key, e.defaultValueString))
     // push the query's filters into the parquet scan: row groups whose
     // column statistics contradict a predicate are skipped whole, and
     // column indexes prune at page granularity — at 100 TB this is the
@@ -271,22 +248,13 @@ object ParquetIO {
         conf, p, ParquetMetadataConverter.NO_FILTER))
       .groupBy(_._2.getFileMetaData.getSchema)
       .values.toSeq
-    var outIdx = -1
-    byFooter.flatMap { group =>
-      // greedy chunking on input-file boundaries: close a chunk once it
-      // holds something and the next input would push it past the target
-      val chunks = group.foldLeft(
-        (Vector.empty[Vector[(Path, org.apache.parquet.hadoop.metadata.ParquetMetadata)]], 0L)) {
-        case ((acc, bytes), in @ (_, footer)) =>
-          val sz = footer.getBlocks.asScala.map(_.getCompressedSize).sum
-          if (acc.nonEmpty && acc.last.nonEmpty && bytes + sz > targetBytes)
-            (acc :+ Vector(in), sz)
-          else if (acc.isEmpty) (Vector(Vector(in)), sz)
-          else (acc.init :+ (acc.last :+ in), bytes + sz)
-      }._1
-      chunks.map { chunk =>
-        outIdx += 1
-        val target = targetFor(outIdx)
+    byFooter
+      .flatMap(group => Landing.chunkBySize(group,
+        (in: (Path, org.apache.parquet.hadoop.metadata.ParquetMetadata)) =>
+          in._2.getBlocks.asScala.map(_.getCompressedSize).sum,
+        targetBytes))
+      .zipWithIndex.map { case (chunk, i) =>
+        val target = targetFor(i)
         val footer = chunk.head._2
         val writer = new ParquetFileWriter(
           conf, footer.getFileMetaData.getSchema, target,
@@ -298,6 +266,5 @@ object ParquetIO {
         writer.end(footer.getFileMetaData.getKeyValueMetaData)
         target
       }
-    }
   }
 }

@@ -73,7 +73,8 @@ object BandIndex {
     * SimHash chunks — r14 verdict #4). A change to ANY of these makes
     * existing index files unreadable-as-intended.
     */
-  private def metaPropsFor(banding: String): Seq[(String, String)] =
+  private def metaPropsFor(banding: String): Seq[(String, String)] = {
+    StreamingNearDedup.requireBanding(banding)
     banding match {
       case StreamingNearDedup.BandingMinHash => Seq(
         "numBuckets" -> NumBuckets.toString,
@@ -92,19 +93,18 @@ object BandIndex {
         // the key space is xxhash64 over word-level 3-gram shingle
         // strings; the width is a layout constant like the others
         "shingle" -> "3")
-      case e if StreamingNearDedup.embedBanding(e).isDefined =>
+      case embed =>
         // embed records the PARAMETERIZED banding (numBands × bitsPerBand
         // — the corpus-size knob), so an `embed-8x24` table rejects an
         // `embed` (8x8) writer through the same numBands/bandSize diff
-        val (nb, bits) = StreamingNearDedup.embedBanding(e).get
+        val (nb, bits) = StreamingNearDedup.embedBanding(embed).get
         Seq(
           "numBuckets" -> NumBuckets.toString,
           "banding" -> StreamingNearDedup.BandingEmbed,
           "numBands" -> nb.toString,
           "bandSize" -> bits.toString)
-      case other => throw new IllegalArgumentException(
-        s"unknown banding '$other'")
     }
+  }
 
   /** Validate this jar's layout constants (for the declared `banding`)
     * against the table's persisted `_banddex/_meta`, creating it when

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.sink.{GraftSinkOptions, Landing}
+
 /** Streaming ingestion with cross-epoch NEAR-duplicate dedup — the LSH
   * upgrade of [[StreamingDedup]] (which drops only exact content matches):
   * a document is dropped when it shares ANY MinHash band with ANY earlier
@@ -205,8 +207,6 @@ object StreamingNearDedup {
     }.drop("_v", "_nrm")
   }
 
-  /** [[withBands]] / [[withSimHashBands]] / [[withEmbedBands]] by declared
-    * scheme name. */
   /** Adds the `nkeys` array column for [[BandingNgram]]: xxhash64
     * fingerprints of the doc's distinct word-level 3-gram shingles (the
     * same construction as [[withBands]]'s signature input, minus the
@@ -226,18 +226,31 @@ object StreamingNearDedup {
       .drop("_tk")
   }
 
-  def withBandsFor(docs: DataFrame, banding: String): DataFrame =
+  /** The one validator of banding scheme names ([[withBandsFor]], hence
+    * [[start]], and [[BandIndex]]'s layout record): an unknown name fails
+    * with every supported scheme listed.
+    */
+  private[graft] def requireBanding(banding: String): Unit =
+    require(banding == BandingMinHash || banding == BandingSimHash ||
+      banding == BandingNgram || embedBanding(banding).isDefined,
+      s"unknown banding '$banding'; supported: $BandingMinHash, " +
+        s"$BandingSimHash, $BandingNgram, $BandingEmbed, " +
+        s"$BandingEmbed-<bands>x<bits>")
+
+  /** [[withBands]] / [[withSimHashBands]] / [[withNgramBands]] /
+    * [[withEmbedBands]] by declared scheme name.
+    */
+  def withBandsFor(docs: DataFrame, banding: String): DataFrame = {
+    requireBanding(banding)
     banding match {
       case BandingMinHash => withBands(docs)
       case BandingSimHash => withSimHashBands(docs)
       case BandingNgram => withNgramBands(docs)
-      case e if embedBanding(e).isDefined =>
-        val (nb, bits) = embedBanding(e).get
+      case embed =>
+        val (nb, bits) = embedBanding(embed).get
         withEmbedBands(docs, nb, bits)
-      case other => throw new IllegalArgumentException(
-        s"unknown banding '$other'; supported: $BandingMinHash, " +
-          s"$BandingSimHash, $BandingEmbed, $BandingEmbed-<bands>x<bits>")
     }
+  }
 
   /** Exploded (doc_id, band key) rows over WHATEVER band_i columns the
     * frame carries (8 for minhash, 4 for simhash) — derived from the
@@ -266,30 +279,6 @@ object StreamingNearDedup {
         .filter(col("bk").isNotNull)
     }
 
-  /** `compactEvery` > 0 folds [[BandIndex.compact]] into the stream loop
-    * every that-many epochs (serial with the writer, so the swap is
-    * invisible to probes) — the self-maintaining posture a long-running
-    * ingest needs to keep per-bucket file counts O(log corpus) instead of
-    * O(epochs).
-    *
-    * Single-writer: start() takes the table's [[BandIndex]] writer lease
-    * and FAILS FAST if another live stream holds it — two concurrent
-    * writers would race the index's rename-publish and corrupt the dedup
-    * state. The lease is renewed every epoch (so a crashed writer's lease
-    * goes stale after `leaseStaleMs` and a restart can take over) and
-    * released when the query terminates.
-    */
-  /** `compactTableEvery` > 0 additionally folds a MINOR data-table
-    * compaction ([[graft.sink.Compact]] with `deltasOnly`) into the loop:
-    * the per-epoch delta files consolidate into one file per cycle, so a
-    * downstream batch reader of an unbounded ingest plans O(epochs /
-    * compactTableEvery) files instead of O(epochs). Cost per cycle is
-    * bounded by bytes ingested since the last one (never table size), and
-    * the in-flight epoch is protected so replays stay exact. Off by
-    * default: compaction makes a tail restarting from an offset BELOW the
-    * consolidation watermark unable to replay those epochs individually —
-    * the documented log-compaction trade a deployment opts into.
-    */
   /** The single-collision drop decision both the streaming loop and
     * [[dedupBatchAgainstIndex]] apply to one epoch's arrivals — SHARED
     * code, so batch-vs-streaming equivalence holds by construction (and
@@ -390,6 +379,30 @@ object StreamingNearDedup {
     })
   }
 
+  /** `compactEvery` > 0 folds [[BandIndex.compact]] into the stream loop
+    * every that-many epochs (serial with the writer, so the swap is
+    * invisible to probes) — the self-maintaining posture a long-running
+    * ingest needs to keep per-bucket file counts O(log corpus) instead of
+    * O(epochs).
+    *
+    * Single-writer: start() takes the table's [[BandIndex]] writer lease
+    * and FAILS FAST if another live stream holds it — two concurrent
+    * writers would race the index's rename-publish and corrupt the dedup
+    * state. The lease is renewed every epoch (so a crashed writer's lease
+    * goes stale after `leaseStaleMs` and a restart can take over) and
+    * released when the query terminates.
+    *
+    * `compactTableEvery` > 0 additionally folds a MINOR data-table
+    * compaction ([[graft.sink.Compact]] with `deltasOnly`) into the loop:
+    * the per-epoch delta files consolidate into one file per cycle, so a
+    * downstream batch reader of an unbounded ingest plans O(epochs /
+    * compactTableEvery) files instead of O(epochs). Cost per cycle is
+    * bounded by bytes ingested since the last one (never table size), and
+    * the in-flight epoch is protected so replays stay exact. Off by
+    * default: compaction makes a tail restarting from an offset BELOW the
+    * consolidation watermark unable to replay those epochs individually —
+    * the documented log-compaction trade a deployment opts into.
+    */
   def start(
       docs: DataFrame,
       path: String, db: String, table: String,
@@ -399,11 +412,20 @@ object StreamingNearDedup {
       compactTableEvery: Int = 0,
       banding: String = BandingMinHash,
       sinkOptions: Map[String, String] = Map.empty): StreamingQuery = {
-    require(banding == BandingMinHash || banding == BandingSimHash ||
-      banding == BandingNgram || embedBanding(banding).isDefined,
-      s"unknown banding '$banding'; supported: $BandingMinHash, " +
-        s"$BandingSimHash, $BandingNgram, $BandingEmbed, " +
-        s"$BandingEmbed-<bands>x<bits>")
+    // fail fast, before the lease, on band columns the landing cannot
+    // store (ngram's and embed's arrays in scalar-only jsonl/orc), which
+    // would otherwise kill the stream inside a task at epoch 0
+    val landing = sinkOptions.collectFirst {
+      case (k, v) if k.equalsIgnoreCase(GraftSinkOptions.FORMAT) => v
+    }.map(Landing.forOption).getOrElse(Landing.Jsonl)
+    val bandedSchema = withBandsFor(docs, banding).schema
+    try landing.checkSchema(bandedSchema)
+    catch {
+      case e: IllegalArgumentException => throw new IllegalArgumentException(
+        s"banding '$banding' adds columns the ${landing.name} landing cannot " +
+          s"store (${e.getMessage}); land the stream with sinkOptions " +
+          s"${GraftSinkOptions.FORMAT}=${Landing.Parquet.name}", e)
+    }
     val tableDir = s"$path/$db.$table"
     val owner = java.util.UUID.randomUUID.toString
     // consecutive in-loop table-compaction failures: transient FS faults
@@ -445,13 +467,13 @@ object StreamingNearDedup {
         banded.join(drops, Seq("doc_id"), "left_anti")
           .write.format("graft-streaming").mode("append")
           // passthrough first: the routing/epoch options below are the
-          // dedup loop's contract and always win. The embed scheme's
-          // streams carry an array `embedding` column, which the default
-          // jsonl landing (reference JSON-scalar contract) rejects — pass
-          // format=parquet/orc here to land vector payloads columnar.
+          // dedup loop's contract and always win. The ngram and embed
+          // schemes' streams carry array columns (`nkeys`, `embedding`),
+          // which only the parquet landing stores — jsonl (the reference's
+          // JSON-scalar contract) and orc are scalar-only.
           .options(sinkOptions)
           .option("path", path).option("db", db).option("table", table)
-          .option(graft.sink.GraftSinkOptions.COMMIT_EPOCH, epochId)
+          .option(GraftSinkOptions.COMMIT_EPOCH, epochId)
           .save()
         // index append AFTER the data commit (see BandIndex crash/replay
         // protocol) — and it records EVERY arrival, kept or dropped

@@ -484,6 +484,26 @@ class StreamingSurfaceSpec extends SparkSpec {
     assert(ex.getMessage.contains("layout mismatch"))
   }
 
+  test("a banded stream whose landing cannot store the band columns fails fast at start()") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val dir = Files.createTempDirectory("bandland").toString
+    val docs = MemoryStream[(Long, String)].toDF().toDF("doc_id", "text")
+    // ngram's `nkeys` is an array column: the default jsonl landing and orc
+    // are scalar-only, so the stream could only die inside a task at epoch 0
+    for (sinkOptions <- Seq(Map.empty[String, String], Map("FORMAT" -> "orc"))) {
+      val e = intercept[IllegalArgumentException] {
+        graft.streaming.StreamingNearDedup.start(docs, dir, "corpus", "docs",
+          s"$dir/_cp", banding = graft.streaming.StreamingNearDedup.BandingNgram,
+          sinkOptions = sinkOptions)
+      }
+      assert(e.getMessage.contains("format=parquet"), e.getMessage)
+      assert(e.getMessage.contains("scalar"), e.getMessage)
+    }
+    // rejected before the writer lease: nothing exists under the table yet
+    assert(!new java.io.File(s"$dir/corpus.docs").exists)
+  }
+
   test("wide embed banding (embed-4x16): the corpus-size knob bands identically and pins its width") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -33,11 +33,11 @@ class ParquetLandingSpec extends SparkSpec {
     val o = GraftSinkOptions.from(new CaseInsensitiveStringMap(
       Map("path" -> "/x", "db" -> "d", "table" -> "t",
         "format" -> "PARQUET").asJava))
-    assert(o.isParquet)
+    assert(o.landing === Landing.Parquet)
     val orc = GraftSinkOptions.from(new CaseInsensitiveStringMap(
       Map("path" -> "/x", "db" -> "d", "table" -> "t",
         "format" -> "orc").asJava))
-    assert(orc.isOrc)
+    assert(orc.landing === Landing.Orc)
     val e = intercept[IllegalArgumentException] {
       GraftSinkOptions.from(new CaseInsensitiveStringMap(
         Map("path" -> "/x", "db" -> "d", "table" -> "t",

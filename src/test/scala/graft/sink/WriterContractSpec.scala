@@ -10,7 +10,7 @@ class WriterContractSpec extends AnyFunSuite {
   private def opts(format: String, dir: String) = GraftSinkOptions(
     path = dir, db = "t", table = "x", partitionColumns = Seq.empty,
     batchSize = 10, txnPerBatch = 10, autoCreatePartitions = true,
-    format = format)
+    landing = Landing.forOption(format))
 
   private val nested = StructType(Seq(
     StructField("doc_id", LongType),
@@ -29,13 +29,18 @@ class WriterContractSpec extends AnyFunSuite {
     assert(e.getMessage.contains("scalar"))
   }
 
-  test("columnar writers accept the same nested schema at construction") {
-    for (fmt <- Seq("parquet", "orc")) {
-      val dir = java.nio.file.Files.createTempDirectory("wcs2").toString
-      val w = new GraftDataWriter(nested, opts(fmt, dir),
+  test("parquet accepts a nested schema at construction, orc rejects it") {
+    val dir = java.nio.file.Files.createTempDirectory("wcs2").toString
+    val w = new GraftDataWriter(nested, opts("parquet", dir),
+      new Configuration(false), 0, 0L, 0L)
+    w.abort() // never wrote; just proving construction succeeds
+    // orc is scalar-only like jsonl: its contract must fail at construction
+    // as well, or an all-empty epoch on a nested-schema orc stream commits
+    val e = intercept[IllegalArgumentException] {
+      new GraftDataWriter(nested, opts("orc", dir),
         new Configuration(false), 0, 0L, 0L)
-      w.abort() // never wrote; just proving construction succeeds
     }
+    assert(e.getMessage.contains("scalar"))
   }
 
   test("TempDirs.scratch: re-requesting a prefix deletes the previous " +
